@@ -1,18 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY narrows a local iteration; unset = every entry
+    val entries = GraftSession.entries()
+    val spark = GraftSession.get()
     // pay session/codegen/parquet-reader/join/window machinery warmup once,
     // outside any timing, on the tiny region/nation tables
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -31,24 +24,13 @@ object Bench {
     // Failed queries report -1 (and poison the total) so a regression can't
     // masquerade as a fast run.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // local-iteration filter (mirrors Verify); unset for the driver's run
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Run isolation: queries that checkpoint/persist internally (composed
-    // curation's stage frames, connected components' labels, IVF training
-    // caches) leak storage blocks into the shared JVM; 92 queries × runs of
-    // accumulated blocks = the GC/page-pressure ordering noise that swung
-    // identical code ±3-4× between rounds. Called before EVERY run (warmup
-    // and timed), not just between entries: an entry whose each run persists
-    // fresh blocks (plans differ per run via checkpoint RDD ids) otherwise
-    // accumulates ~4× its working set within its own timed window — r6
-    // measured qc01/qc02 at 37/32 s in the full catalog vs 15.3/14.3 s
-    // isolated, with the between-entries-only cleanup. The cleanup runs
-    // outside the timed window, so it costs wall-clock, not measured time.
+    // GraftSession.isolate before EVERY run (warmup and timed), not just
+    // between entries: an entry whose each run persists fresh blocks (plans
+    // differ per run via checkpoint RDD ids) otherwise accumulates ~4× its
+    // working set within its own timed window. The 200 ms settle lets the
+    // collector's aftermath clear before the next run starts.
     def isolate(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      System.gc()
+      GraftSession.isolate(spark)
       Thread.sleep(200)
     }
     // cumulative JVM GC milliseconds — the per-run delta distinguishes
@@ -87,14 +69,10 @@ object Bench {
     }
     val sentinelStart = sentinel()
     var sentinelMid = -1.0
-    val entries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // One entry's full measurement protocol (warmup + `runs` timed runs,
     // isolation before every run). Factored out so the contention requeue
     // below re-measures an entry under the IDENTICAL protocol.
-    def measureEntry(name: String,
-                     fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Double) = {
+    def measureEntry(name: String, fn: GraftSession.Entry): (Double, Double, Double) = {
       // stop at the first failure: one -1 already poisons the query's
       // result, so re-running a known-failed (possibly slow-to-fail) query
       // runs-1 more times buys nothing
@@ -213,15 +191,12 @@ object Bench {
     val fnByName = entries.toMap
     // A renamed persist-heavy entry silently dropping out of the requeue
     // would reintroduce the r8/r11 inflated-headline failure mode with no
-    // warning — fail loudly on the full-catalog (driver) run, warn on a
-    // deliberately-filtered local run.
-    val missingHeavy = persistHeavy.keys.filterNot(fnByName.contains).toSeq.sorted
-    if (missingHeavy.nonEmpty) {
-      val msg = s"persistHeavy names missing from the catalog (renamed?): " +
-        missingHeavy.mkString(", ")
-      if (only.isEmpty) throw new IllegalStateException(s"[bench] $msg")
-      else System.err.println(s"[bench] WARNING: $msg")
-    }
+    // warning — fail loudly. Checked against the whole catalog: entries a
+    // SPARK_GRAFT_ONLY run leaves out are not renamed.
+    val missingHeavy = persistHeavy.keys.filterNot(SparkEntry.queries.contains).toSeq.sorted
+    if (missingHeavy.nonEmpty)
+      throw new IllegalStateException("[bench] persistHeavy names missing from the " +
+        s"catalog (renamed?): ${missingHeavy.mkString(", ")}")
     var requeueSentRatio = -1.0
     // Per-entry band trigger: the sentinel is a pure-CPU probe and misses
     // memory-bandwidth contention (r13 driver run: sentinel 1.16 — under

@@ -1,631 +1,20 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
 
-/** ANN headroom probe (not part of the driver contract; feeds docs/SCALE.md):
-  * deterministic synthetic embeddings at a configurable corpus size, timing
-  * the exact baseline vs sign-LSH vs IVF top-k. The fixture embeddings cap
-  * out at 2 000 vectors, where brute force wins on fixed overhead alone —
-  * this probe shows the crossover where the bucketed paths take over, i.e.
-  * the regime the 100 TB design targets.
+/** Scale tooling (not part of the catalog contract; feeds docs/SCALE.md):
   *
-  * Usage: sbt "runMain graft.ScaleProbe [corpusSize] [dim]"
+  *   sbt "runMain graft.ScaleProbe synth <sfDir> <copies> [outDir] [skew]"
+  *   sbt "runMain graft.ScaleProbe exponent [sfDir] [copies] [entries.csv] [skew]"
+  *   sbt "runMain graft.ScaleProbe gatebench [nRows]"
+  *
+  * `synth` builds an N-copy scale fixture (tools/sweep.sh), `exponent`
+  * measures per-entry time-scaling exponents on one, and `gatebench`
+  * prices the curation gate's text kernels. The retired one-shot modes and
+  * where their results live are listed in docs/SCALE.md.
   */
 object ScaleProbe {
 
-  /** `runMain graft.ScaleProbe shingle <sfDir>`: component timings for the
-    * near-dup pipeline (where does qt05's time actually go: shingling UDF,
-    * posting explode, or the inverted-index join?).
-    */
-  private def shingleProbe(sfDir: String): Unit = {
-    val spark = GraftSession.get()
-    val docs = graft.sources.Tables.table(spark, sfDir, "documents")
-    def time(name: String)(act: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = act
-      println(f"""{"probe":"$name","sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$rows}""")
-    }
-    val sh = docs.select(col("doc_id"), col("lang"),
-      graft.operators.Dedup.wordShingles(col("text"), 3).as("sh"))
-    time("shingle_only")(sh.count())
-    time("shingle_explode")(sh.select(col("doc_id"), explode(col("sh"))).count())
-    time("full_qt05")(graft.operators.Dedup.ngramJaccardPairsIndexed(
-      docs, "doc_id", "text", n = 3, threshold = 0.15, blockCols = Seq("lang")).count())
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe jaccard [nDocs]`: where prefix filtering
-    * actually crosses over the plain inverted index — a HOT-SHINGLE corpus
-    * (every document shares a boilerplate head, the web-corpus shape):
-    * each doc is 30 identical boilerplate tokens + 30 unique tokens, so
-    * ~28 shingles have df = nDocs while the rest have df ≈ 1. The plain
-    * index must materialize Σdf² ≈ 28·nDocs² candidate rows from the hot
-    * postings; the prefix path's rarest-first order sorts the hot
-    * shingles to the unindexed tail, so at threshold 0.7 the prefix is
-    * unique-shingles-only and candidate generation stays ~linear. Twenty
-    * planted exact-dup pairs (ids < 40 collapse in twos) keep the output
-    * non-empty — correctness itself is the qt05p/qt05t oracle's job.
-    * On the near-uniform sf0.1 FIXTURE the same prefix machinery benches
-    * ~3× slower than the plain index (no hot postings to dodge, df pass +
-    * rank window are pure overhead) — this probe is the regime where it
-    * pays; both numbers are recorded in docs/SCALE.md.
-    */
-  private def jaccardProbe(nDocs: Int): Unit = {
-    val spark = GraftSession.get()
-    import org.apache.spark.sql.DataFrame
-    val boiler = concat_ws(" ", (0 until 30).map(j => lit(s"boiler$j")): _*)
-    // ids < 40 pair up (2k and 2k+1 share unique tokens → exact dups)
-    val uid = when(col("id") < 40, col("id") - col("id") % 2).otherwise(col("id"))
-    val unique = concat_ws(" ", (0 until 30).map(j =>
-      concat(lit("u"), uid, lit("x"), lit(j))): _*)
-    val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-      concat(boiler, lit(" "), unique).as("text")).persist()
-    docs.count()
-    def time(name: String)(df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      println(f"""{"probe":"$name","n":$nDocs,"sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$rows}""")
-    }
-    time("prefix_t07")(graft.operators.Dedup.ngramJaccardPairsPrefix(
-      docs, "doc_id", "text", n = 3, threshold = 0.7))
-    time("indexed_t07")(graft.operators.Dedup.ngramJaccardPairsIndexed(
-      docs, "doc_id", "text", n = 3, threshold = 0.7))
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe qc01 [sfDir]`: per-stage wall-clock of the
-    * composed curation entry — where does qc01's bench time actually go
-    * (gates, pair generation + components, decontamination, packing)?
-    */
-  private def qc01Probe(sfDir: String): Unit = {
-    val spark = GraftSession.get()
-    def time[A](name: String)(act: => A): A = {
-      val t0 = System.nanoTime()
-      val r = act
-      println(f"""{"probe":"$name","sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      r
-    }
-    // the bench entry's exact fixture + config — shared definitions, so
-    // the probe cannot silently drift from the workload it decomposes
-    val (corpus, bench) = graft.queries.CurationQ.fixture(spark, sfDir)
-    val cfg = graft.queries.CurationQ.cfg
-    // sub-stages of the construction cost: pair generation vs verify vs CC
-    val canon = corpus.select(col("doc_id"),
-      graft.functions.TextFns.scrubPii(
-        graft.functions.Expressions.normalizeText(col("text"), "NFC")).as("text"))
-    time("canon_quality_gate")(canon
-      .filter(graft.functions.TextFns.tokenCount(col("text")) >= cfg.minTokens &&
-        graft.functions.TextFns.qualityScore(col("text")) >= cfg.minQuality).count())
-    val rawPairs = graft.operators.Dedup.ngramJaccardPairsPrefix(
-      canon, "doc_id", "text", n = cfg.ngramN, threshold = cfg.nearDupJaccard)
-    time("prefix_pairs_085_unblocked")(println("pairs=" + rawPairs.count()))
-    val rawPairsIdx = graft.operators.Dedup.ngramJaccardPairsIndexed(
-      canon, "doc_id", "text", n = cfg.ngramN, threshold = cfg.nearDupJaccard)
-    time("indexed_pairs_085_unblocked")(println("pairs=" + rawPairsIdx.count()))
-    val st = time("construct_stages_cc_loop")(
-      graft.pipeline.Curation.stages(corpus, bench, "doc_id", "text",
-        cfg, persist = true))
-    time("count_quality")(st.quality.count())
-    time("count_spans")(st.spanGated.count())
-    time("count_exact")(st.exact.count())
-    time("count_deduped")(st.deduped.count())
-    time("count_clean")(st.clean.count())
-    time("count_split")(st.split.count())
-    time("count_packed")(st.packed.count())
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe qc02 [sfDir]`: per-stage wall-clock of the
-    * incremental curation entry (state build / delta construction / counts).
-    */
-  private def qc02Probe(sfDir: String): Unit = {
-    val spark = GraftSession.get()
-    def time[A](name: String)(act: => A): A = {
-      val t0 = System.nanoTime()
-      val r = act
-      println(f"""{"probe":"$name","sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      r
-    }
-    val cfg = graft.queries.CurationQ.cfgDelta
-    val (corpusRaw, bench, delta) = graft.queries.CurationQ.fixtureDelta(spark, sfDir)
-    val state = time("state_build")(graft.pipeline.Curation.stateOf(
-      graft.pipeline.Curation.stages(corpusRaw, bench, "doc_id", "text", cfg, persist = true),
-      "doc_id", "text"))
-    // delta sub-stages, timed independently of the composed construction
-    val canon = delta.select(col("doc_id"),
-      graft.functions.TextFns.scrubPii(
-        graft.functions.Expressions.normalizeText(col("text"), "NFC")).as("text"))
-    time("delta_gates")(canon
-      .filter(graft.functions.TextFns.tokenCount(col("text")) >= cfg.minTokens &&
-        graft.functions.TextFns.qualityScore(col("text")) >= cfg.minQuality).count())
-    val exactD = graft.operators.Dedup.dedupDelta(canon, state.fingerprints, "text", "doc_id")
-    time("delta_exact")(exactD.count())
-    val rawPairs = graft.operators.Dedup.nearDupDelta(
-      state.docs, exactD, "doc_id", "text", cfg.ngramN, cfg.nearDupJaccard)
-    time("delta_neardup_pairs")(rawPairs.count())
-    // the edit-distance verify the composed path adds on top of rawPairs
-    val verified = cfg.maxEditRatio.map { maxRatio =>
-      val texts = state.docs.unionByName(exactD.select(col("doc_id"), col("text")))
-      val ta = texts.select(col("doc_id").as("id_a"), col("text").as("__ta"))
-      val tb = texts.select(col("doc_id").as("id_b"), col("text").as("__tb"))
-      val bound = ceil(lit(maxRatio) *
-        greatest(length(col("__ta")), length(col("__tb"))).cast("double")).cast("int")
-      val dist = org.apache.spark.sql.graftbridge.Bridge.column(
-        org.apache.spark.sql.catalyst.expressions.Levenshtein(
-          org.apache.spark.sql.graftbridge.Bridge.expression(col("__ta")),
-          org.apache.spark.sql.graftbridge.Bridge.expression(col("__tb")),
-          Some(org.apache.spark.sql.graftbridge.Bridge.expression(bound))))
-      rawPairs.join(ta, "id_a").join(tb, "id_b")
-        .filter(dist >= 0)
-        .select("id_a", "id_b")
-    }.getOrElse(rawPairs.select("id_a", "id_b"))
-    time("delta_pairs_verified")(verified.count())
-    val frozen = verified.localCheckpoint(true)
-    time("cc_only_on_frozen_pairs")(
-      graft.operators.Dedup.connectedComponents(frozen).count())
-    val st = time("construct_curate_delta_cc")(
-      graft.pipeline.Curation.curateDelta(state, delta, bench, "doc_id", "text",
-        cfg, persist = true))
-    time("count_quality")(st.quality.count())
-    time("count_exact")(st.exact.count())
-    time("count_deduped")(st.deduped.count())
-    time("count_clean")(st.clean.count())
-    time("count_split")(st.split.count())
-    time("count_packed")(st.packed.count())
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe curation [nDocs]`: headroom timings for the
-    * curation-family operators on a deterministic synthetic corpus far
-    * beyond fixture scale — the word-count-shaped reductions (vocab),
-    * map-only stages (split, pack window), the fingerprint anti-join
-    * (delta dedup), and label-propagation rounds on a chain-structured
-    * pair graph (the worst diameter near-dup clusters realistically show).
-    */
-  private def curationProbe(nDocs: Int): Unit = {
-    val spark = GraftSession.get()
-    import org.apache.spark.sql.DataFrame
-    // ~50-token docs over a 10k-word vocabulary, hash-derived (no RNG)
-    val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-      concat_ws(" ", transform(sequence(lit(0), lit(49)),
-        j => concat(lit("w"), pmod(xxhash64(col("id"), j), lit(10000L))))).as("text"))
-      .persist()
-    docs.count()
-    def time(name: String)(df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      println(f"""{"probe":"$name","n":$nDocs,"sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$rows}""")
-    }
-    val withTokens = docs.select(col("doc_id"), lit(50L).as("n_tokens"))
-    time("split")(graft.operators.Split.assignSplit(docs, col("doc_id"),
-      Seq("train" -> 98.0, "val" -> 1.0, "test" -> 1.0)))
-    time("pack")(graft.operators.Pack.packSequences(withTokens, "doc_id", "n_tokens",
-      budget = 2048, shards = 64))
-    time("vocab_global_top10")(graft.operators.Vocab.topNgrams(docs, "text", n = 2, k = 10))
-    // aggregate over the result length so column pruning cannot skip the
-    // scrub expression (count() alone would)
-    time("scrub_normalize")(docs.select(length(graft.functions.TextFns.scrubPii(
-      graft.functions.Expressions.normalizeText(col("text"), "NFC"))).as("l"))
-      .agg(sum(col("l"))))
-    time("dedup_delta")(graft.operators.Dedup.dedupDelta(
-      docs, docs.select(graft.functions.TextFns.fingerprint(col("text")).as("fp"))
-        .filter(col("fp").isNotNull).limit(nDocs / 2), "text", "doc_id"))
-    // chain-of-6 pair graph: nDocs/10 nodes, diameter 5 — more rounds than
-    // any realistic near-dup cluster needs
-    val chain = spark.range(nDocs / 10)
-      .filter(col("id") % 6 =!= 5)
-      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    time("components_chain6")(graft.operators.Dedup.connectedComponents(chain))
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe semdedup [n]`: SemDeDup recall on a
-    * CLUSTERED embedding fixture — the regime the operator exists for
-    * (qt26r's near-random fixture is the adversarial floor: no real
-    * cluster structure, so cell blocking can only lose). Deterministic
-    * synthetic corpus: `k` true clusters, member = cluster center +
-    * small hash-derived perturbation; within-cluster cosine ≈ 1, across
-    * ≈ random. Recall of `semDedupPairs` vs the exact all-pairs set,
-    * per nlist. Measured (n=4000, k=8): recall 1.0 / 0.94 / 0.69 / 0.14
-    * at nlist 4 / 8 / 16 / 64 — nlist <= k merges true clusters (full
-    * recall, higher Σ|cell|² cost), nlist ≈ k recovers the structure
-    * (~0.94 vs 0.24 on the near-random fixture), and oversharding past k
-    * splits true clusters and sheds their pairs. The operating rule at
-    * 100 TB: size nlist to the expected duplicate-cluster granularity,
-    * not to the join budget alone.
-    */
-  private def semDedupProbe(n: Int): Unit = {
-    val spark = GraftSession.get()
-    val k = 8; val dim = 32; val eps = 0.05; val tau = 0.9
-    val emb = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        ((pmod(xxhash64(col("id") % k, j), lit(2000001L)).cast("double") / 1000000.0 - 1.0)
-          + (pmod(xxhash64(col("id"), j, lit(777)), lit(2000001L)).cast("double") / 1000000.0 - 1.0)
-            * eps).cast("float")).as("embedding"))
-      .persist()
-    emb.count()
-    val exact = graft.operators.Dedup.embeddingNearDupPairs(
-      emb, "vec_id", "embedding", threshold = tau).select("id_a", "id_b").persist()
-    val nExact = exact.count()
-    for (nlist <- Seq(4, 8, 16, 64)) {
-      val t0 = System.nanoTime()
-      val hit = graft.operators.Dedup.semDedupPairs(emb, "vec_id", "embedding",
-          nlist = nlist, tau = tau, lloydIters = 2)
-        .join(exact, Seq("id_a", "id_b"), "left_semi").count()
-      println(f"""{"probe":"semdedup_clustered","nlist":$nlist,"n":$n,"true_clusters":$k,""" +
-        f""""recall":${if (nExact == 0) 0.0 else hit.toDouble / nExact}%.4f,""" +
-        f""""exact_pairs":$nExact,"sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-    }
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe bm25 [sfDir]`: build-vs-serve split of the
-    * BM25 family against the documents fixture — the cost a production
-    * deployment amortizes (index built once, persisted, every query batch
-    * served from the reload) vs what qt28 charges per run (build+serve
-    * fused). Serve is timed against the RELOADED parquet index.
-    */
-  private def bm25Probe(sfDir: String): Unit = {
-    val spark = GraftSession.get()
-    val docs = graft.sources.Tables.table(spark, sfDir, "documents")
-    val queries = docs.filter(col("doc_id") % 100 === 0)
-      .select(col("doc_id").as("query_id"),
-        substring(col("text"), 1, 60).as("qtext"))
-    def time[A](name: String)(act: => A): A = {
-      val t0 = System.nanoTime()
-      val r = act
-      println(f"""{"probe":"bm25_$name","sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      r
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_probe").toString
-    val built = graft.operators.Retrieval.bm25Index(docs)
-    time("build_persist")(graft.operators.Retrieval.saveBm25Index(built, dir))
-    val idx = graft.operators.Retrieval.loadBm25Index(spark, dir)
-    time("serve_cold")(
-      graft.operators.Retrieval.bm25TopKIndexed(idx, queries, k = 10).count())
-    time("serve_warm")(
-      graft.operators.Retrieval.bm25TopKIndexed(idx, queries, k = 10).count())
-    time("fused_build_serve")(
-      graft.operators.Retrieval.bm25TopK(docs, queries, k = 10).count())
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe pagerank <sfDir>`: what oracle-mode
-    * bit-exactness costs on q50's trade graph — production combinable
-    * sums vs sorted folds, and the marginal cost per extra iteration
-    * (linear if the per-iteration checkpoint is doing its job).
-    */
-  private def pagerankProbe(sfDir: String): Unit = {
-    val spark = GraftSession.get()
-    val ol = graft.sources.Tables.table(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(graft.sources.Tables.table(spark, sfDir, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")), "o_orderkey")
-      .select(col("o_custkey").cast("long").as("cnode"),
-        (negate(col("l_suppkey").cast("long")) - 1).as("snode"))
-    val e = ol.select(col("cnode").as("src"), col("snode").as("dst"))
-      .unionByName(ol.select(col("snode").as("src"), col("cnode").as("dst")))
-    def time(name: String)(act: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = act
-      println(f"""{"probe":"$name","sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$rows}""")
-    }
-    for (iters <- Seq(1, 3, 6))
-      time(s"production_i$iters")(graft.operators.PageRank
-        .pageRank(e, "src", "dst", iters).count())
-    for (iters <- Seq(1, 3))
-      time(s"oracle_i$iters")(graft.operators.PageRank
-        .pageRank(e, "src", "dst", iters, oracleMode = true).count())
-    spark.stop()
-  }
-
-  /** Prices the two halves of the persisted trade-graph seam q50/q53/q50p
-    * share: BUILD (orders×lineitem join + both-direction union + distinct
-    * + parquet write — paid once per corpus version) vs SERVE (read the
-    * store, run 3 production PageRank iterations — paid per consumer).
-    * The bench entries record serve; this records what they amortized.
-    */
-  private def tradeGraphProbe(sfDir: String): Unit = {
-    val spark = GraftSession.get()
-    val dir = java.nio.file.Files.createTempDirectory("graft_probe_edges_").toString
-    graft.sources.Tables.deleteOnExit(dir)
-    val t0 = System.nanoTime()
-    // the entries' exact edge frame (shared definition — the probe cannot
-    // silently price a different pipeline than q50/q53/q50p serve)
-    graft.queries.Extras.buildTradeEdges(spark, sfDir)
-      .write.mode("overwrite").parquet(dir)
-    println(f"""{"probe":"tradegraph_build_persist","sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-    val t1 = System.nanoTime()
-    val served = graft.operators.PageRank.pageRank(
-      spark.read.parquet(dir), "src", "dst", iters = 3, assumeDistinct = true).count()
-    println(f"""{"probe":"tradegraph_serve_pagerank3","sec":${(System.nanoTime() - t1) / 1e9}%.2f,"rows":$served}""")
-    spark.stop()
-  }
-
-  /** Throughput record for the streaming curation gate (Streams
-    * .curateStream: NFC+PII scrub → quality gates → fingerprint + SimHash
-    * in-horizon dedup) under a rate source — the measured-economics
-    * treatment the batch family gets. 1-in-8 rows repeat a rotating
-    * template so the dedup state actually drops rows. Polls until 3
-    * non-empty micro-batches complete (3-min deadline), DROPS the first
-    * (it carries stream startup: state-store init, codegen, the
-    * accumulated source backlog), and reports the median per-batch
-    * processedRowsPerSecond over the steady-state remainder.
-    */
-  private def streamGateProbe(rowsPerSec: Int, partitions: Int,
-                              mode: String = "full",
-                              provider: String = "default"): Unit = {
-    val spark = GraftSession.get()
-    // provider=rocksdb runs the same gate with state off-heap in RocksDB
-    // (the corpus-scale launch shape, Streams.rocksDbStateStore) so the
-    // throughput delta and the state-growth fingerprint are measured, not
-    // asserted
-    if (provider == "rocksdb")
-      graft.streaming.Streams.rocksDbStateStore.foreach {
-        case (k, v) => spark.conf.set(k, v)
-      }
-    val filler = " lorem ipsum dolor sit amet consectetur adipiscing elit sed do" +
-      " eiusmod tempor incididunt ut labore et dolore magna aliqua"
-    val docs = spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSec).option("numPartitions", partitions).load()
-      .select(col("value").as("doc_id"), col("timestamp").as("ts"),
-        when(col("value") % 8 === 0,
-          concat(lit("template boilerplate page"), lit(filler),
-            (col("value") % 3).cast("string")))
-          .otherwise(concat(lit("unique document number "),
-            col("value").cast("string"), lit(filler))).as("text"))
-    // mode attributes the 25k-vs-357k gap: "full" is the shipped gate
-    // (stateless prefix + two dedup state stores, micro-batch); "stateless"
-    // is the same chain minus the stateful operators (isolates state-store
-    // cost); "continuous" runs the stateless prefix under the continuous
-    // trigger (no micro-batch planning at all — the full gate CANNOT run
-    // here: Spark's continuous mode rejects stateful operators, which is
-    // itself the structural bound on the shipped chain's trigger choice)
-    val gated = mode match {
-      case "full" =>
-        graft.streaming.Streams.curateStream(docs, "doc_id", "text", "ts",
-          minTokens = 10, minQuality = 0.3)
-      case "stateless" | "continuous" =>
-        graft.streaming.Streams.curateGatePrefix(docs, "text",
-          minTokens = 10, minQuality = 0.3, blockTerms = Nil, blockMaxRatio = 0.1)
-      case "baseline" => docs // no gate at all: the harness's own floor
-      case other => sys.error(s"unknown streamgate mode: $other")
-    }
-    val trigger =
-      if (mode == "continuous")
-        org.apache.spark.sql.streaming.Trigger.Continuous("1 second")
-      else org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second")
-    val q = gated.writeStream.format("noop").trigger(trigger).start()
-    // steady-state wait: under an over-capacity rate the source backlog
-    // makes batches balloon, so only a few huge batches complete — poll
-    // until >= 3 NON-EMPTY batches (3-minute deadline) and DROP the first
-    // (it carries stream startup); bail early if the query died so a
-    // failure surfaces instead of a spin ending in an all-zero record
-    val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-    while (q.exception.isEmpty &&
-           q.recentProgress.count(_.numInputRows > 0) < 3 &&
-           System.nanoTime() < deadline)
-      Thread.sleep(1000)
-    q.exception.foreach(throw _)
-    val prog = q.recentProgress.toSeq.filter(_.numInputRows > 0).drop(1)
-    q.stop()
-    val rows = prog.map(_.numInputRows).sum
-    val secs = prog.map(_.batchDuration).sum / 1e3
-    // aggregate rows/busy-second over the steady batches: more stable
-    // than a median over a 2-3 element pool of backlogged mega-batches.
-    // Continuous-mode epochs may report no batchDuration — fall back to
-    // the engine's own processedRowsPerSecond over the steady window.
-    val sustained =
-      if (secs > 0) rows / secs
-      else if (prog.nonEmpty) prog.map(_.processedRowsPerSecond).sum / prog.size
-      else 0.0
-    println(f"""{"probe":"streamgate","mode":"$mode","provider":"$provider","rate_rows_per_sec":$rowsPerSec,"partitions":$partitions,"batches":${prog.size},""" +
-      f""""input_rows":$rows,"busy_sec":$secs%.1f,"sustained_rows_per_sec":$sustained%.0f}""")
-    // state-growth fingerprint: per steady batch, total live state rows +
-    // bytes across the gate's stateful operators — the series an operator
-    // reads to size executor state capacity (heap for the default
-    // provider, local disk + block cache for rocksdb)
-    prog.foreach { p =>
-      val ops = p.stateOperators
-      if (ops.nonEmpty) {
-        val rowsTotal = ops.map(_.numRowsTotal).sum
-        val mem = ops.map(_.memoryUsedBytes).sum
-        println(s"""{"probe":"streamgate_state","provider":"$provider","batch":${p.batchId},""" +
-          s""""state_rows":$rowsTotal,"state_bytes":$mem,"input_rows":${p.numInputRows}}""")
-      }
-    }
-    spark.stop()
-  }
-
-  /** Stage decomposition of the composed retrieval chain (qr01/qr01c):
-    * times each leg against the same checkpointed chunk store so the
-    * composed entries' cost attributes to a stage instead of a guess.
-    */
-  private def qr01Probe(sfDir: String): Unit = {
-    val spark = GraftSession.get()
-    def time(name: String)(act: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = act
-      println(f"""{"probe":"$name","sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$rows}""")
-    }
-    val docs = graft.sources.Tables.table(spark, sfDir, "documents")
-    // the entries' exact chunk store + parameters (shared definitions —
-    // the probe cannot silently decompose a different pipeline)
-    val k = graft.queries.TextOps.RagK
-    val dim = graft.queries.TextOps.RagDim
-    var chunks: org.apache.spark.sql.DataFrame = null
-    time("chunk_build_checkpoint") {
-      chunks = graft.queries.TextOps.ragChunkStore(spark, sfDir).localCheckpoint()
-      chunks.count()
-    }
-    val queries = docs.filter(col("doc_id") < 5)
-      .select(col("doc_id").as("query_id"), col("text").as("qtext"))
-    var idx: graft.operators.Retrieval.Bm25Index = null
-    time("bm25_index_build") {
-      idx = graft.operators.Retrieval.bm25Index(chunks, "ck", "chunk_text")
-      val frozen = idx.copy(
-        postings = idx.postings.localCheckpoint(),
-        docLens = idx.docLens.localCheckpoint(),
-        dfreq = idx.dfreq.localCheckpoint(),
-        stats = idx.stats.localCheckpoint())
-      idx = frozen
-      idx.postings.count()
-    }
-    time("bm25_serve_uncapped")(graft.operators.Retrieval
-      .bm25TopKIndexed(idx, queries, k = k, idCol = "ck").count())
-    val cap = scala.math.floor(0.5 * chunks.count()).max(1)
-    time("bm25_serve_capped")(graft.operators.Retrieval
-      .bm25TopKIndexed(idx, queries, k = k, maxDf = Some(cap), idCol = "ck").count())
-    var cEmb: org.apache.spark.sql.DataFrame = null
-    time("chunk_hash_embed") {
-      cEmb = chunks.select(col("ck").as("vid"),
-        graft.operators.Similarity.hashEmbedding(col("chunk_text"), dim).as("emb"))
-        .localCheckpoint()
-      cEmb.count()
-    }
-    // the entry's struct query key (chunk_id −1 never collides with a
-    // real chunk) — a bare long vid stopped analyzing when the chunk key
-    // became a struct (r10)
-    val qEmb = queries.select(
-      struct(col("query_id").as("doc_id"), lit(-1L).as("chunk_id")).as("vid"),
-      graft.operators.Similarity.hashEmbedding(col("qtext"), dim).as("emb"))
-    time("dense_brute_topk")(graft.operators.Similarity
-      .bruteForceTopK(cEmb, qEmb, k = k, idCol = "vid", vecCol = "emb").count())
-    time("full_chain_uncapped")(graft.queries.TextOps
-      .defs("qr01_retrieval")(spark, sfDir).count())
-    time("full_chain_capped")(graft.queries.TextOps
-      .defs("qr01c_retrieval_capped")(spark, sfDir).count())
-    time("serve_only_qr02")(graft.queries.TextOps
-      .defs("qr02_retrieval_serve")(spark, sfDir).count())
-    time("serve_only_qr02_warm")(graft.queries.TextOps
-      .defs("qr02_retrieval_serve")(spark, sfDir).count())
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe contended <entry> [ballastMb] [churnMbPerS]
-    * [bwThreads]`: measured contention-robustness for a catalog entry. The
-    * driver's bench environment amplified the persist-heavy composed
-    * entries 2-3× while per-entry medians sat at ~1.1× (BENCH_r08/r09 +
-    * docs/SCALE.md) — and its own stamps (gc_worst[qc01] 1.45 s of a
-    * 68.6 s entry) say the dominant mechanism is EXTERNAL: sibling
-    * processes stealing CPU cycles, memory bandwidth, and page cache, with
-    * in-JVM GC as the secondary amplifier. The adversary models both:
-    *   - a live heap ballast (default 2048 MB of the bench JVM's 8 GB
-    *     heap, retained) + churn threads allocating short-lived 1 MB
-    *     arrays at a paced rate (default 512 MB/s) — the GC amplifier;
-    *   - `bwThreads` no-allocation memory-bandwidth hogs (default 8), each
-    *     spinning System.arraycopy over a private 256 MB long buffer —
-    *     LLC-defeating copies that steal cores and DRAM bandwidth the way
-    *     a co-tenant container does, without touching this JVM's GC.
-    * Runs the entry 3× quiet (min), then 3× under the adversary; reports
-    * min seconds + GC seconds per regime and the amplification ratio,
-    * stamped with the active SPARK_GRAFT_CACHE_LEVEL so storage-level
-    * A/Bs read directly off the output. Entry semantics are untouched.
-    */
-  private def contendedProbe(entry: String, ballastMb: Int, churnMbPerS: Int,
-                             bwThreads: Int): Unit = {
-    val spark = GraftSession.get()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val fn = graft.SparkEntry.queries.getOrElse(entry,
-      sys.error(s"unknown catalog entry: $entry"))
-    def gcMs(): Long = {
-      val it = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.iterator()
-      var t = 0L
-      while (it.hasNext) { val v = it.next().getCollectionTime; if (v > 0) t += v }
-      t
-    }
-    def isolate(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      System.gc()
-      Thread.sleep(200)
-    }
-    def runOnce(): (Double, Double) = {
-      isolate()
-      val g0 = gcMs(); val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      ((System.nanoTime() - t0) / 1e9, (gcMs() - g0) / 1e3)
-    }
-    runOnce() // untimed warmup (codegen, parquet footers), as in Bench
-    val quiet = (1 to 3).map(_ => runOnce())
-    // adversary on: live ballast + paced allocation churn
-    val ballast = new java.util.ArrayList[Array[Long]]()
-    var i = 0
-    while (i < ballastMb) { ballast.add(new Array[Long](131072)); i += 1 }
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val churnThreads = 4
-    val perThreadMbS = math.max(1, churnMbPerS / churnThreads)
-    val allocators = (1 to churnThreads).map { t =>
-      val th = new Thread(() => {
-        val nsPerMb = (1e9 / perThreadMbS).toLong
-        var sink = 0L // live use of each array so the allocation survives DCE
-        while (!stop.get()) {
-          val t0 = System.nanoTime()
-          val a = new Array[Byte](1 << 20)
-          a((t0 % (1 << 20)).toInt) = 1
-          sink += a.length
-          val left = nsPerMb - (System.nanoTime() - t0)
-          if (left > 1000000L) Thread.sleep(left / 1000000L)
-        }
-        if (sink == Long.MinValue) println(sink) // defeat DCE, never true
-      })
-      th.setDaemon(true); th.start(); th
-    }
-    // bandwidth hogs: allocation-free bulk-copy spin over OFF-HEAP direct
-    // buffers far larger than LLC — steals cores + DRAM bandwidth the way
-    // a co-tenant container does, while adding zero load to this JVM's
-    // heap or collector (on-heap hog buffers would themselves shrink the
-    // heap under test and conflate the two mechanisms)
-    val hogs = (1 to bwThreads).map { t =>
-      val th = new Thread(() => {
-        val a = java.nio.ByteBuffer.allocateDirect(128 << 20)
-        val b = java.nio.ByteBuffer.allocateDirect(128 << 20)
-        while (!stop.get()) {
-          a.clear(); b.clear(); a.put(b)
-          b.clear(); a.clear(); b.put(a)
-        }
-      })
-      th.setDaemon(true); th.start(); th
-    }
-    val threads = allocators ++ hogs
-    val contended = try (1 to 3).map(_ => runOnce())
-    finally { stop.set(true); threads.foreach(_.join(2000)); ballast.clear() }
-    val (qMin, qGc) = quiet.minBy(_._1)
-    val (cMin, cGc) = contended.minBy(_._1)
-    // the level Curation actually resolves (env override or its default) —
-    // reading the env here with a probe-local default drifted once already
-    val level = graft.pipeline.Curation.stageStorageLevel.description
-    println(f"""{"probe":"contended","entry":"$entry","cache_level":"$level",""" +
-      f""""ballast_mb":$ballastMb,"churn_mb_s":$churnMbPerS,"bw_threads":$bwThreads,""" +
-      f""""quiet_min_sec":$qMin%.2f,"quiet_gc_sec":$qGc%.2f,""" +
-      f""""contended_min_sec":$cMin%.2f,"contended_gc_sec":$cGc%.2f,""" +
-      f""""amplification":${cMin / qMin}%.2f}""")
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe exponent [sfDir] [copies] [entries.csv]`:
-    * measured time-scaling exponents. No sf1 fixture exists, so the probe
-    * SYNTHESIZES one: each scalable table unioned `copies` times with its
-    * key columns offset by i·2^40 per copy (disjoint key spaces, identical
-    * per-key density — 10 independent shards of the same distribution,
-    * which is what "10× the corpus" means), dims (region/nation/part) and
-    * events copied verbatim, TPC-H foreign keys offset consistently so the
-    * join graph is `copies` disjoint copies sharing the fixed dims.
-    * Fixture modulus predicates survive scaling: 2^40 ≡ 1 (mod 25, 17,
-    * 31, 13), so `doc_id % 25 == 0`-style splits select the same FRACTION
-    * of every copy (residues shift by i, sizes don't drift).
-    *
-    * Each entry then runs warmup+timed at 1× and at `copies`×; the
-    * reported exponent is log(t_N/t_1)/log(N) — ~1 is linear, ~2
-    * quadratic; log-factor terms (sorts) read as slightly >1. Fixed-panel
-    * query sets (`vec_id < 20`) stay fixed under scaling; the recall
-    * probes' `% 31` panels grow WITH the corpus by construction, so their
-    * sampled-exact terms are expected ~2 — the fixed-panel production
-    * variant is the linear form (see SCALE.md round-10).
-    */
   /** Synthesize an `nCopies`-× scale fixture from `sfDir` into `outDir` —
     * the shared synthesizer behind the exponent probe and the standalone
     * `synth` mode (tools/sweep.sh). See the key-offset / content-re-key /
@@ -732,8 +121,29 @@ object ScaleProbe {
     }
   }
 
+  /** `runMain graft.ScaleProbe exponent [sfDir] [copies] [entries.csv]`:
+    * measured time-scaling exponents. No sf1 fixture exists, so the probe
+    * SYNTHESIZES one: each scalable table unioned `copies` times with its
+    * key columns offset by i·2^40 per copy (disjoint key spaces, identical
+    * per-key density — 10 independent shards of the same distribution,
+    * which is what "10× the corpus" means), dims (region/nation/part) and
+    * events copied verbatim, TPC-H foreign keys offset consistently so the
+    * join graph is `copies` disjoint copies sharing the fixed dims.
+    * Fixture modulus predicates survive scaling: 2^40 ≡ 1 (mod 25, 17,
+    * 31, 13), so `doc_id % 25 == 0`-style splits select the same FRACTION
+    * of every copy (residues shift by i, sizes don't drift).
+    *
+    * Each entry then runs warmup+timed at 1× and at `copies`×; the
+    * reported exponent is log(t_N/t_1)/log(N) — ~1 is linear, ~2
+    * quadratic; log-factor terms (sorts) read as slightly >1. Fixed-panel
+    * query sets (`vec_id < 20`) stay fixed under scaling; the recall
+    * probes' `% 31` panels grow WITH the corpus by construction, so their
+    * sampled-exact terms are expected ~2 — the fixed-panel production
+    * variant is the linear form (see SCALE.md round-10).
+    */
   private def exponentProbe(sfDir: String, copies: Int, entriesCsv: String,
                             skewSource: Boolean = false): Unit = {
+    val entries = GraftSession.entries(Some(entriesCsv))
     val spark = GraftSession.get()
     val suffix = if (skewSource) "_skew" else ""
     val scaledDir = s"/tmp/graft_scale_${copies}x$suffix"
@@ -749,13 +159,10 @@ object ScaleProbe {
     if (skewSource) synthFixture(spark, sfDir, baseDir, 1, skewSource)
     println(f"""{"probe":"exponent_setup","copies":$copies,"sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
     def isolate(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      System.gc()
+      GraftSession.isolate(spark)
       Thread.sleep(200)
     }
-    def timeOne(entry: String, dir: String): (Double, Long) = {
-      val fn = graft.SparkEntry.queries(entry)
+    def timeOne(fn: GraftSession.Entry, dir: String): (Double, Long) = {
       // the spill-aware sizing rule applied, not dodged: shuffle partition
       // count scales with the input (32 at ≤10×, 32·copies/10 above), the
       // way a cluster sizes partitions to the data. At 100× on 32
@@ -778,10 +185,10 @@ object ScaleProbe {
       // ±0.5-1 s would dominate their exponents); heavy ones run once
       ((1 to (if (warm < 60) 2 else 1)).map(_ => timed()).min, rows)
     }
-    entriesCsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { entry =>
+    entries.foreach { case (entry, fn) =>
       try {
-        val (t1, rows1) = timeOne(entry, baseDir)
-        val (tN, rowsN) = timeOne(entry, scaledDir)
+        val (t1, rows1) = timeOne(fn, baseDir)
+        val (tN, rowsN) = timeOne(fn, scaledDir)
         val expo = math.log(tN / t1) / math.log(copies.toDouble)
         // rows_N / rows_1 ≈ copies is the synthesis-honesty check: if a gate
         // killed the scaled copies (the two failure modes in the synthesis
@@ -799,62 +206,6 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** `runMain graft.ScaleProbe quotaskew [skewedDir]`: the preBuckets
-    * valve shown ENGAGING on a skewed corpus (synthesize with
-    * `exponent <sf> <copies> <entries> skew` first — 80 % of documents in
-    * one source). Times qt31's sourceQuota with the valve OFF (one rank
-    * window must sort the hot source alone in one task) and ON (ranks
-    * within (source, content-hash-bucket) first, bounding the final
-    * window to preBuckets·quota rows), plus qt33's topFractionBy for the
-    * family record. Output-identity between the two quota paths is
-    * asserted, not assumed.
-    */
-  private def quotaSkewProbe(dir: String): Unit = {
-    val spark = GraftSession.get()
-    val docs = graft.sources.Tables.table(spark, dir, "documents")
-    def time(name: String)(act: => Long): Unit = {
-      act // warmup
-      val best = (1 to 2).map { _ =>
-        val t0 = System.nanoTime(); act; (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"""{"probe":"quotaskew","stage":"$name","sec":$best%.2f}""")
-    }
-    def quota(b: Int) = graft.operators.Mixture.sourceQuota(
-      docs, "source", "doc_id", quota = 50, rankBy = col("n_chars"), preBuckets = b)
-    time("quota_valve_off")(quota(0).count())
-    time("quota_valve_on_8")(quota(8).count())
-    time("quota_valve_on_64")(quota(64).count())
-    val off = quota(0).select("doc_id").as(spark.implicits.newLongEncoder)
-      .collect().toSet
-    val on = quota(8).select("doc_id").as(spark.implicits.newLongEncoder)
-      .collect().toSet
-    require(on == off, s"valve changed the kept set: ${on.size} vs ${off.size}")
-    println(s"""{"probe":"quotaskew","stage":"identity","kept":${on.size},"equal":true}""")
-    time("top_fraction")(graft.operators.Report.topFractionBy(
-      docs.select(col("doc_id"), col("lang"),
-        graft.functions.TextFns.qualityScore(col("text")).as("quality")),
-      Seq("lang"), "doc_id", fraction = 0.6, rankBy = col("quality")).count())
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe survival <entry> [sfDir] [scaledDir]`: the
-    * synthesis-honesty companion for REPORT-shaped entries (qc01/qc02
-    * return a 12-row stage-count frame, so the exponent probe's rows_N
-    * column can't show whether the scaled copies survive the gates —
-    * the counts INSIDE the report can). Prints the report at 1× and at
-    * the scaled dir; every corpus-derived stage count scaling by ~copies
-    * is the proof the gates pass the synthetic copies.
-    */
-  private def survivalProbe(entry: String, sfDir: String, scaledDir: String): Unit = {
-    val spark = GraftSession.get()
-    val fn = graft.SparkEntry.queries(entry)
-    Seq("base" -> sfDir, "scaled" -> scaledDir).foreach { case (tag, dir) =>
-      val rows = fn(spark, dir).limit(40).collect()
-      rows.foreach(r => println(s"""{"probe":"survival","entry":"$entry","dir":"$tag","row":"${r.toSeq.mkString("|")}"}"""))
-    }
-    spark.stop()
-  }
-
   private val exponentDefaults = "qc01_curation,qc01s_curation_stored," +
     "qc02_curation_delta," +
     "q50_pagerank,q50p_pagerank_prod,q53_trustrank,qr01_retrieval," +
@@ -867,6 +218,7 @@ object ScaleProbe {
     // scales with the synthesized nation/zone universe; expect rows ≈
     // copies² and exponent ≈ 2 by construction)
     "qp01_pipeline,q32_silver_od,q35_silver_distances"
+
 
   /** `runMain graft.ScaleProbe gatebench [nRows]`: per-stage batch cost of
     * the curation/stream gate's text functions, native kernels vs their
@@ -968,6 +320,7 @@ object ScaleProbe {
     spark.stop()
   }
 
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("gatebench"))
       return gateBench(args.lift(1).map(_.toInt).getOrElse(1000000))
@@ -992,98 +345,7 @@ object ScaleProbe {
         args.lift(2).map(_.toInt).getOrElse(10),
         args.lift(3).getOrElse(exponentDefaults),
         skewSource = args.lift(4).contains("skew"))
-    if (args.headOption.contains("quotaskew"))
-      return quotaSkewProbe(args.lift(1).getOrElse("/tmp/graft_scale_10x_skew"))
-    if (args.headOption.contains("survival"))
-      return survivalProbe(args.lift(1).getOrElse("qc01_curation"),
-        args.lift(2).getOrElse("/root/testdata/sf0.1"),
-        args.lift(3).getOrElse("/tmp/graft_scale_10x"))
-    if (args.headOption.contains("contended"))
-      return contendedProbe(args.lift(1).getOrElse("qc01_curation"),
-        args.lift(2).map(_.toInt).getOrElse(2048),
-        args.lift(3).map(_.toInt).getOrElse(512),
-        args.lift(4).map(_.toInt).getOrElse(8))
-    if (args.headOption.contains("pagerank"))
-      return pagerankProbe(args.lift(1).getOrElse("/root/testdata/sf0.1"))
-    if (args.headOption.contains("qr01"))
-      return qr01Probe(args.lift(1).getOrElse("/root/testdata/sf0.1"))
-    if (args.headOption.contains("tradegraph"))
-      return tradeGraphProbe(args.lift(1).getOrElse("/root/testdata/sf0.1"))
-    if (args.headOption.contains("streamgate"))
-      return streamGateProbe(args.lift(1).map(_.toInt).getOrElse(50000),
-        args.lift(2).map(_.toInt).getOrElse(8),
-        args.lift(3).getOrElse("full"),
-        args.lift(4).getOrElse("default"))
-    if (args.headOption.contains("bm25"))
-      return bm25Probe(args.lift(1).getOrElse("/root/testdata/sf0.1"))
-    if (args.headOption.contains("semdedup"))
-      return semDedupProbe(args.lift(1).map(_.toInt).getOrElse(4000))
-    if (args.headOption.contains("shingle")) return shingleProbe(args.lift(1).getOrElse("/root/testdata/sf0.1"))
-    if (args.headOption.contains("jaccard"))
-      return jaccardProbe(args.lift(1).map(_.toInt).getOrElse(4000))
-    if (args.headOption.contains("qc01"))
-      return qc01Probe(args.lift(1).getOrElse("/root/testdata/sf0.1"))
-    if (args.headOption.contains("qc02"))
-      return qc02Probe(args.lift(1).getOrElse("/root/testdata/sf0.1"))
-    if (args.headOption.contains("curation"))
-      return curationProbe(args.lift(1).map(_.toInt).getOrElse(1000000))
-    val n = args.headOption.map(_.toInt).getOrElse(100000)
-    val dim = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = GraftSession.get()
-    // deterministic pseudo-random vectors in [-1, 1] (hash-derived; no RNG)
-    val corpus = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)),
-        j => (pmod(xxhash64(col("id"), j), lit(2000001L)).cast("double") / 1000000.0 - 1.0)
-          .cast("float")).as("embedding"))
-      .persist()
-    corpus.count() // materialize once: all paths then read identical input
-    val queries = corpus.filter(col("vec_id") < 20)
-    def time(name: String)(df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      println(f"""{"probe":"$name","n":$n,"dim":$dim,"sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$rows}""")
-    }
-    time("brute_force")(Similarity.bruteForceTopK(corpus, queries, k = 5))
-    time("lsh_12x2")(Similarity.lshTopK(corpus, queries, k = 5, planes = 12, tables = 2))
-    time("ivf_64_probe8")(Similarity.ivfTopK(corpus, queries, k = 5, nlist = 64, nProbe = 8, lloydIters = 1))
-    time("ivf_64_probe8_sampled")(Similarity.ivfTopK(corpus, queries, k = 5,
-      nlist = 64, nProbe = 8, lloydIters = 1, trainFraction = 0.1))
-    // PQ, build and scan charged separately (production amortizes the
-    // build): the ADC scan has the same exhaustive shape as brute force
-    // but scores m=8 byte codes via table lookups instead of dim float
-    // mults — on disk-resident data it also reads ~30× fewer scan bytes
-    val t0 = System.nanoTime()
-    val idx = Similarity.pqIndex(corpus, m = 8, ksub = 16, lloydIters = 1,
-      trainFraction = 0.1)
-    val frozen = idx.copy(codes = idx.codes.localCheckpoint(true))
-    println(f"""{"probe":"pq_m8_build","n":$n,"dim":$dim,"sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-    time("pq_m8_adc_scan_rerank50")(
-      Similarity.pqTopKIndexed(frozen, corpus, queries, k = 5, rerank = 50))
-    // the persisted-index path: write codes+codebooks once, then serve the
-    // query batch from the reloaded parquet artifact — the build-once/
-    // query-many split a production deployment actually runs (the save is
-    // the one-off cost; the serve is what repeats per batch)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_store").toString
-    val tS = System.nanoTime()
-    Similarity.savePqIndex(idx, dir)
-    println(f"""{"probe":"pq_m8_save","n":$n,"dim":$dim,"sec":${(System.nanoTime() - tS) / 1e9}%.2f}""")
-    val tL = System.nanoTime()
-    val reloaded = Similarity.loadPqIndex(spark, dir)
-    println(f"""{"probe":"pq_m8_load","n":$n,"dim":$dim,"sec":${(System.nanoTime() - tL) / 1e9}%.2f}""")
-    time("pq_m8_serve_from_store_rerank50")(
-      Similarity.pqTopKIndexed(reloaded, corpus, queries, k = 5, rerank = 50))
-    // composed IVF+PQ: same codes, but the ADC scan touches only the
-    // nProbe/nlist probed cells — the crossover vs the exhaustive ADC scan
-    // is the whole point of the composition (build charged separately,
-    // codes frozen like the PQ path so serve-vs-serve is like-for-like)
-    val tC = System.nanoTime()
-    val ivfpq = Similarity.ivfPqIndex(corpus, nlist = 64, m = 8, ksub = 16,
-      lloydIters = 1, trainFraction = 0.1)
-    val frozenC = Similarity.IvfPqIndex(ivfpq.centroids,
-      ivfpq.pq.copy(codes = ivfpq.pq.codes.localCheckpoint(true)))
-    println(f"""{"probe":"ivfpq_64_m8_build","n":$n,"dim":$dim,"sec":${(System.nanoTime() - tC) / 1e9}%.2f}""")
-    time("ivfpq_64_probe8_m8_rerank50")(
-      Similarity.ivfPqTopKIndexed(frozenC, corpus, queries, k = 5, nProbe = 8, rerank = 50))
-    spark.stop()
+    throw new IllegalArgumentException(s"unknown ScaleProbe mode ${args.headOption.getOrElse("(none)")}; " +
+      "expected synth, exponent or gatebench")
   }
 }

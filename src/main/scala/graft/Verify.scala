@@ -1,33 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // SPARK_GRAFT_ONLY narrows a local iteration; unset = every entry
+    val entries = GraftSession.entries()
     // Scale-sweep regime: shuffle-partition count must ride the fixture
     // (the spill-aware sizing rule — at 100× on cpus-many partitions the
     // 60M-row graph joins sort millions of rows per task and the single-JVM
     // execution pool throws UNABLE_TO_ACQUIRE_MEMORY, measured in the
     // exponent probe). Unset (the driver regime) = cpus, as always.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val builder = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .fold(GraftSession.builder())(p => GraftSession.builder(shufflePartitions = p.trim.toInt))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: comma-separated query names; unset (the
-    // driver's invocation) dumps everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Scale-sweep regime only: a per-entry wall cap, so an entry that is
     // CAPACITY-bound at a synthesized fixture (qt12r's exact all-pairs
@@ -104,24 +93,13 @@ object Verify {
       new java.io.File(d, "_SUCCESS").exists() ||
         new java.io.File(d, "_CAPACITY").exists()
     }
-    // Between-entry cache isolation (Bench.isolate's rule applied to the
-    // dump): entries that persist/localCheckpoint internally leak storage
-    // blocks into the shared JVM, and because `queries` is a HashMap the
-    // ENTRY ORDER shifts whenever the catalog grows — the r14 100× dump
-    // OOMed the 8g heap when the hash order made a new panel entry the
-    // first to pay the 160M-edge store build on top of accumulated blocks
-    // (r13's order survived the same build). Safe between entries: each
-    // entry is fully written to parquet before the next starts, so no
-    // later scan depends on an earlier entry's cached/checkpointed frame.
-    def isolate(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      System.gc()
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      isolate()
+    // Between-entry cache isolation: the r14 100× dump OOMed the 8g heap
+    // when a panel entry paid the 160M-edge store build on top of blocks
+    // earlier entries had left behind. Each entry is fully written to
+    // parquet before the next starts, so no later scan depends on an
+    // earlier entry's cached/checkpointed frame.
+    entries.foreach { case (name, fn) =>
+      GraftSession.isolate(spark)
       if (preDeclared.contains(name)) {
         System.err.println(s"[verify] $name CAPACITY: pre-declared skip at $sfDir")
         val d = new java.io.File(s"$outDir/$name")

@@ -375,12 +375,18 @@ object Dedup {
   /** Persist a [NearDupIndex] under `dir` (sized/ dfs/ + the shingle-width
     * marker). Strings and integers round-trip parquet bit-exactly, so a
     * reloaded index serves pairs bit-identical to the in-session build
-    * (DedupSpec round-trip).
+    * (DedupSpec round-trip). The marker is the commit point: it is
+    * deleted before either frame is overwritten and written only after
+    * both land, so a save that dies midway leaves no index (loaders see
+    * the marker missing) rather than one generation's `sized` under
+    * another's `dfs`.
     */
   def saveNearDupIndex(index: NearDupIndex, dir: String): Unit = {
+    val marker = java.nio.file.Paths.get(dir, "_graft_neardup_n.txt")
+    java.nio.file.Files.deleteIfExists(marker)
     index.sized.write.mode("overwrite").parquet(s"$dir/sized")
     index.dfs.write.mode("overwrite").parquet(s"$dir/dfs")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_graft_neardup_n.txt"),
+    java.nio.file.Files.write(marker,
       s"${index.n}\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
@@ -550,7 +556,7 @@ object Dedup {
     // `component` alias (id ≡ component at init), and the captured
     // partitioning hash(component) then fails the round join's hash(id)
     // requirement by exprId — one avoidable exchange on round 1 (measured
-    // via the PartProbe/JobsProbe broadcast-off dumps).
+    // via broadcast-off per-action plan dumps).
     val ids = edges.select(col("src").as("id")).distinct()
     val init = (if (checkpointDir.isEmpty) ids.repartition(parts, col("id")) else ids)
       .withColumn("component", col("id"))

@@ -30,27 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Dsir {
 
-  /** Per-bucket log ratios log(p_target/p_raw) from one corpus pass.
-    * `isTarget` marks the rows whose distribution defines the target —
-    * in-corpus exemplars (the paper uses a separate curated corpus; a
-    * predicate over the same frame is the degenerate single-table form —
-    * pass a literal-true column over a second frame union'd in if the
-    * target lives elsewhere). Output: (bucket, lr), `buckets` rows.
-    */
-  def bucketLogRatios(docs: DataFrame, isTarget: Column, textCol: String,
-                      buckets: Int): DataFrame = {
-    val tok = tokenBuckets(docs, isTarget, textCol, buckets)
-    val counts = tok.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("cr"),
-        sum(when(col("__tgt"), lit(1L)).otherwise(lit(0L))).as("ct"))
-    val totals = counts.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
-    counts.crossJoin(broadcast(totals))
-      .withColumn("lr",
-        log(((col("ct") + lit(1.0)) * (col("nr") + lit(buckets.toDouble))) /
-          ((col("cr") + lit(1.0)) * (col("nt") + lit(buckets.toDouble)))))
-      .select(col("bucket"), col("lr"))
-  }
-
   /** (doc, target?, bucket) token stream: fnv1a64 of each whitespace token,
     * low bits as the bucket id (buckets must be a power of two so the
     * signed-long mask equals the unsigned mod the SQL twin computes).

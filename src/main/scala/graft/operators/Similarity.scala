@@ -320,7 +320,7 @@ object Similarity {
     * before returning. At 100 TB training runs on a SAMPLE:
     * `trainFraction` takes a deterministic hash-slice of the corpus
     * (k-means cells only need the density shape, not every vector;
-    * ScaleProbe shows the mean pass otherwise growing linearly with n).
+    * docs/SCALE.md records the mean pass otherwise growing linearly with n).
     */
   private[graft] def trainCentroids(c: DataFrame, nlist: Int, lloydIters: Int,
                                     trainFraction: Double,
@@ -862,8 +862,7 @@ object Similarity {
   /** A built PQ index: the trained codebooks plus the encoded corpus
     * (corpus_id, codes, cn — the exact float norm). In production this is
     * the one-off artifact you persist and amortize over every query batch
-    * (the ScaleProbe `pq` decomposition charges build and scan
-    * separately); `codes` is ~m bytes + one float per vector — the store
+    * (docs/SCALE.md prices build and scan separately); `codes` is ~m bytes + one float per vector — the store
     * that must stay resident at 100 TB.
     */
   case class PqIndex(codebooks: Array[Array[Array[Float]]], codes: DataFrame)

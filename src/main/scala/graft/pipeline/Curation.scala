@@ -30,10 +30,8 @@ object Curation {
     * cache holds corpus-sized byte-array batches on the heap; under memory
     * pressure those blocks are exactly what the collector scans and what
     * amplified the composed entries 2-3× in contended environments
-    * (docs/SCALE.md round-9/10 contention notes). Env-selectable
-    * (`SPARK_GRAFT_CACHE_LEVEL`) so the ScaleProbe `contended` harness can
-    * A/B levels without a rebuild. Default chosen by that harness's
-    * round-10 qc01 measurements under the calibrated adversary (2 GB
+    * (docs/SCALE.md round-9/10 contention notes). Chosen by the
+    * round-10 qc01 measurements under a calibrated adversary (2 GB
     * ballast + 512 MB/s churn + 16 bandwidth hogs on 32 cpus):
     * MEMORY_AND_DISK 31.3→39.4 s (1.26×), MEMORY_AND_DISK_SER 28.8→32.5 s
     * (1.13×), DISK_ONLY 31.7→47.0 s (1.48× — spilled reads traverse the
@@ -41,9 +39,8 @@ object Curation {
     * Serialized wins BOTH regimes: compact batches shrink the scannable
     * heap (GC) and the resident bytes the adversary can evict.
     */
-  private[graft] def stageStorageLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_CACHE_LEVEL", "MEMORY_AND_DISK_SER"))
+  private[graft] val stageStorageLevel: org.apache.spark.storage.StorageLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** Storage level for the DELTA pipeline's stage caches. Measured the
     * other way from the batch default on the same adversary: qc02 at
@@ -54,9 +51,8 @@ object Curation {
     * the contended regime has least to spare. Corpus-sized state is NOT
     * affected: it arrives via [loadState] as parquet scans.
     */
-  private[graft] def deltaStorageLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_DELTA_CACHE_LEVEL", "MEMORY_AND_DISK"))
+  private[graft] val deltaStorageLevel: org.apache.spark.storage.StorageLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   case class Config(
       minTokens: Int = 10,
@@ -380,7 +376,7 @@ object Curation {
     // production dedup threshold the prefix indexes ~15-30% of each doc
     // and hot boilerplate shingles sort to the unindexed tail, which is
     // the regime a real corpus (and this fixture's ~31-word vocabulary)
-    // lives in — see ScaleProbe `jaccard` / docs/SCALE.md.
+    // lives in — see docs/SCALE.md.
     // Optional verify stage: confirm Jaccard candidates by edit distance
     // (normalized by the longer text) before they merge clusters
     val rawPairs = Dedup.ngramJaccardPairsPrefix(exact, idCol, textCol,
@@ -624,12 +620,12 @@ object Curation {
     state.shardOffsets.coalesce(1).write.mode("overwrite").parquet(s"$dir/shard_offsets")
     // the near-dup prefix-posting index rides the same artifact when the
     // batch built one (mode hygiene: a state saved WITHOUT the index must
-    // erase a stale one, or the next loadState would serve an index from
-    // an older corpus)
+    // erase a stale one — the whole directory, not just its marker, or
+    // the older corpus's parquet stays behind as an orphan)
     state.nearDupIndex match {
       case Some(ix) => Dedup.saveNearDupIndex(ix, s"$dir/neardup_index")
-      case None => java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, "neardup_index", "_graft_neardup_n.txt"))
+      case None => org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(dir, "neardup_index"))
     }
   }
 

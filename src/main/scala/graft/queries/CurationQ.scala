@@ -64,14 +64,12 @@ object CurationQ {
     * the incremental entry oracles the gate-disabled path (its spanGated
     * frame must equal quality bit-for-bit), while the delta-side gate
     * semantics (windows counted over corpus ∪ delta) is CurationSpec's
-    * planted case. One knob's difference, explicit here so the entry, its
-    * oracle, and ScaleProbe's qc02 decomposition stay in lockstep.
+    * planted case. One knob's difference, explicit here so the entry and
+    * its oracle stay in lockstep.
     */
   val cfgDelta: Curation.Config = cfg.copy(maxDupSpanFrac = None)
 
-  /** The qc01 fixture — ONE definition (ScaleProbe's qc01 decomposition
-    * probe reuses it, so what the probe times is by construction the
-    * workload the bench entry runs): corpus = the doc_id % 17 != 0 slice
+  /** The qc01 fixture — ONE definition: corpus = the doc_id % 17 != 0 slice
     * plus re-submitted copies of docs < 50 under id+10000; benchmark =
     * the doc_id % 17 == 0 slice.
     */

@@ -539,7 +539,7 @@ object Extras {
     // Production-mode probe (rows are still hash-oracled): plain
     // combinable SUM folds instead of oracle-mode's sorted folds — the
     // cost a real caller pays (the sorted fold was measured at 1.9×, see
-    // ScaleProbe pagerank / docs/SCALE.md). Output is the top-20 node SET
+    // docs/SCALE.md). Output is the top-20 node SET
     // with ranks recomputed over the 6-decimal-rounded scores (node-id
     // tiebreak), so the ≤1-ulp partial-sum nondeterminism the production
     // fold allows is absorbed by the rounding and the row set stays
@@ -652,8 +652,7 @@ object Extras {
   private val edgeStore = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The distinct both-direction edge frame itself — ONE definition, shared
-    * by the store builder below and by ScaleProbe's build-cost probe, so
-    * what the probe prices is by construction what the entries serve.
+    * by the store builder below and the entries it serves.
     */
   private[graft] def buildTradeEdges(s: SparkSession, d: String): DataFrame = {
     // BIGINT node ids, sign-tagged (the synthesizer's negative-sentinel

@@ -517,10 +517,7 @@ object TextOps {
   private[graft] val RagDim = 16
   private[graft] val RagK = 10
 
-  /** qr01's chunk store, pre-checkpoint — ONE definition shared with
-    * ScaleProbe's qr01 decomposition so the probe prices exactly the
-    * store the entries build.
-    */
+  /** qr01's chunk store, pre-checkpoint — ONE definition the entries share. */
   private[graft] def ragChunkStore(s: SparkSession, d: String): DataFrame =
     graft.operators.Pack.chunkTokens(T(s, d, "documents"), "doc_id", "text",
         window = RagWindow, stride = RagStride)
@@ -723,8 +720,7 @@ object TextOps {
     // was first-run cost inside the timed window, gone since the bench
     // warms each entry untimed). On a hot-shingle corpus the plain index
     // explodes quadratically while the prefix path stays near-linear
-    // (9.4× at 12k boilerplate docs and diverging — ScaleProbe `jaccard`
-    // mode, docs/SCALE.md). At 100 TB the corpus IS hot-shingle-heavy,
+    // (9.4× at 12k boilerplate docs and diverging — docs/SCALE.md). At 100 TB the corpus IS hot-shingle-heavy,
     // which is why this is the exact scale path.
     "qt05p_ngram_jaccard_prefix" -> ((s, d) =>
       Dedup.ngramJaccardPairsPrefix(T(s, d, "documents"), "doc_id", "text",

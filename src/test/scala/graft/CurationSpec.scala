@@ -271,20 +271,25 @@ class CurationSpec extends SparkSpec {
   test("state store mode switch: plain save over a bucketed dir clears marker + tables") {
     val dir = java.nio.file.Files.createTempDirectory("graft_state_ms").toString
     val batch = Curation.stages(corpus, benchmark, "doc_id", "text", persist = true)
-    val state = Curation.stateOf(batch, "doc_id", "text")
+    val state = Curation.stateOf(batch, "doc_id", "text", ngramN = Some(3))
     Curation.saveState(state, dir, bucketIdCol = Some("doc_id"))
     val marker = java.nio.file.Paths.get(dir, "_graft_state_buckets.txt")
+    val ixDir = java.nio.file.Paths.get(dir, "neardup_index")
     assert(java.nio.file.Files.exists(marker))
+    assert(java.nio.file.Files.isDirectory(ixDir))
     // the hazard: re-save plain over the same dir — without the hygiene,
     // the stale marker makes loadState register bucket metadata over
     // non-bucketed part files (wrong reads or 'Invalid bucket file')
-    Curation.saveState(state, dir, bucketIdCol = None)
+    Curation.saveState(state.copy(nearDupIndex = None), dir, bucketIdCol = None)
     assert(!java.nio.file.Files.exists(marker), "stale bucket marker survived a plain save")
     assert(!spark.catalog.tableExists(Curation.stateTableName(dir, "docs")) &&
       !spark.catalog.tableExists(Curation.stateTableName(dir, "fingerprints")),
       "stale catalog tables survived a plain save")
+    // a save without the index erases the older corpus's index parquet too
+    assert(!java.nio.file.Files.exists(ixDir), "orphaned near-dup index survived a plain save")
     val reloaded = Curation.loadState(spark, dir)
     assert(reloaded.docs.count() === state.docs.count())
+    assert(reloaded.nearDupIndex === None)
   }
 
   test("stateTableName: distinct dirs that sanitize identically stay distinct") {

@@ -437,6 +437,24 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("NearDupIndex: a save that dies midway leaves no index, not a mixed generation") {
+    // the width marker is the commit point: a second save whose `sized`
+    // write fails must not leave the first save's marker standing over
+    // half-overwritten frames
+    val dir = java.nio.file.Files.createTempDirectory("graft_ndix_crash_").toString
+    graft.sources.Tables.deleteOnExit(dir)
+    val ix = Dedup.nearDupIndexOf(docs, "doc_id", "text", 3)
+    val state = graft.pipeline.Curation.CorpusState(docs, docs.select($"text".as("fp")),
+      Seq((0, 0L)).toDF("shard", "offset"), nearDupIndex = Some(ix))
+    graft.pipeline.Curation.saveState(state, dir)
+    assert(graft.pipeline.Curation.loadState(spark, dir).nearDupIndex.map(_.n) === Some(3))
+    val failing = ix.copy(sized = ix.sized.withColumn("__n_sh",
+      when($"__n_sh" > 0, raise_error(lit("injected write failure"))).otherwise($"__n_sh")))
+    intercept[Exception](Dedup.saveNearDupIndex(failing, s"$dir/neardup_index"))
+    assert(graft.pipeline.Curation.loadState(spark, dir).nearDupIndex === None,
+      "an interrupted save must read as no index")
+  }
+
   test("connectedComponents keeps label partitioning across rounds (scale regime: no broadcast)") {
     // At fixture scale AQE broadcasts the tiny label frame, so the
     // per-round plan shape this gates is only visible with auto-broadcast
